@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Observation}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a near-duplicate pair list — the step
@@ -10,33 +10,53 @@ import org.apache.spark.sql.functions._
   * under-deletes: pairs (a,b), (b,c) without (a,c) would keep both a
   * and c if deletion is done per-pair.
   *
-  * Algorithm: min-label propagation with pointer jumping (the
-  * map-reduce connected-components family of Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14). Each
-  * round every node takes the minimum label in its 1-hop
-  * neighborhood, then labels are resolved one extra hop
-  * (label := label(label)) — the pointer-jumping step that collapses
-  * label chains and gives O(log n) rounds on a path instead of O(n).
+  * Two paths, picked from the size of the symmetric, self-loop-free,
+  * distinct edge table (counted by an observation on its fence, so the
+  * count costs no job):
   *
-  * Scale shape: each round is two key-partitioned joins + one
-  * aggregation over the EDGE list — no per-node adjacency list is
-  * ever materialized, so a hub node with millions of neighbors costs
-  * map-side-combined min aggregation, not an in-memory list. The
-  * driver sees one boolean-sized aggregate per round (the converged
-  * check) and the checkpoint fence (Checkpoints.fence — executor-local
-  * by default, reliable FS under `spark.graft.reliableCheckpoints`)
-  * truncates lineage so round r's plan does not replay rounds 1..r-1.
-  * Measured on the committed sf0.1 pair graphs: 12 rounds — the
-  * banded/embedding pair lists contain one chain-shaped component
-  * (near-dups of near-dups), so rounds ≈ log2(chain length), not the
-  * 2-3 a clique-only graph would need.
+  *  - rows × 16 B ≤ `spark.sql.autoBroadcastJoinThreshold`: union-find
+  *    in ONE task over primitive arrays (16 B per row: the endpoints of
+  *    every a < b row plus a sorted id copy, and one int per node), so
+  *    the task holds about as much as Spark already accepts for a
+  *    broadcast table (10 MB by default, 4 MB under
+  *    GraftSession's `lowMemory`). Union by smaller root makes every
+  *    root its component's minimum id. One task replaces the loop's
+  *    ~5 jobs per round: at near-dup sizes the edge table is kilobytes
+  *    and the loop is bound by job count, not bytes.
+  *  - otherwise (or threshold ≤ 0): distributed min-label propagation
+  *    with pointer jumping (the map-reduce connected-components family
+  *    of Kiveris et al., "Connected Components in MapReduce and
+  *    Beyond", SoCC'14). Each round every node takes the minimum label
+  *    in its 1-hop neighborhood and resolves its label one extra hop
+  *    (label := label(label)), which collapses label chains and gives
+  *    O(log n) rounds on a path instead of O(n). Each round is one
+  *    key-partitioned join + one aggregation over the EDGE list — no
+  *    per-node adjacency list is materialized, so a hub node with
+  *    millions of neighbors costs map-side-combined min aggregation.
+  *    The checkpoint fence (Checkpoints.fence — executor-local by
+  *    default, reliable FS under `spark.graft.reliableCheckpoints`)
+  *    truncates lineage so round r's plan does not replay rounds
+  *    1..r-1. Measured on the committed sf0.1 pair graphs: 12–13
+  *    rounds — the banded/embedding pair lists contain one
+  *    chain-shaped component (near-dups of near-dups), so rounds ≈
+  *    log2(chain length), not the 2-3 a clique-only graph would need.
+  *
+  * Both paths return the same (id, comp = min reachable id) rows.
   */
 object ConnectedComponents {
 
-  /** (id, component) for every node appearing in `edges` (id1, id2);
-    * component = the minimum node id reachable from the node. */
-  def components(edges: DataFrame, maxRounds: Int = 25,
-                 jumpsPerRound: Int = 1): DataFrame = {
+  /** Bytes per symmetric edge row held by the single-task path. */
+  private val BytesPerEdgeRow = 16L
+
+  /** Spark's own ceiling on a broadcast table (8 GB), which also keeps
+    * the single task's arrays under the JVM's array length limit. */
+  private val MaxSingleTaskBytes = 8L << 30
+
+  /** (id, component) for every node of a non-self-loop edge in
+    * `edges` (id1, id2); component = the minimum node id reachable
+    * from the node. The distributed path throws if it has not
+    * converged after `maxRounds` rounds. */
+  def components(edges: DataFrame, maxRounds: Int = 25): DataFrame = {
     val e = edges.select(col("id1").cast("long").as("a"), col("id2").cast("long").as("b"))
     // symmetric, self-loop-free edge list — both orientations in ONE
     // pass (Graph.symmetrized): the union form computes the pair
@@ -44,11 +64,65 @@ object ConnectedComponents {
     // candidate + verify pipeline here — only the deepest exchange is
     // reused across the union's branches, the CPU-dense verify re-runs
     // per branch) and doubles the partition count entering distinct
+    val rowsObs = Observation()
     val sym = Checkpoints.fence(
       Graph.symmetrized(e)
         .where(col("a") =!= col("b"))
-        .distinct())
+        .distinct()
+        .observe(rowsObs, count(lit(1)).as("rows")))
+    val rows = rowsObs.get("rows").asInstanceOf[Long]
+    val threshold = math.min(
+      sym.sparkSession.sessionState.conf.autoBroadcastJoinThreshold, MaxSingleTaskBytes)
+    if (threshold > 0 && rows * BytesPerEdgeRow <= threshold) singleTask(sym, rows)
+    else distributed(sym, maxRounds)
+  }
 
+  private def singleTask(sym: DataFrame, rows: Long): DataFrame = {
+    val pairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    sym.as(pairs).coalesce(1)
+      .mapPartitions(it => unionFind(it, rows.toInt))(pairs)
+      .toDF("id", "comp")
+  }
+
+  /** (id, min id of its component) for a symmetric edge list holding
+    * `rows` rows. Each undirected edge appears twice, so only a < b
+    * rows are kept: `rows` endpoints in all. Dense node indices are
+    * id ranks, so the smaller root index is the smaller id. */
+  private def unionFind(edges: Iterator[(Long, Long)], rows: Int): Iterator[(Long, Long)] = {
+    val ends = new Array[Long](rows)
+    var n = 0
+    edges.foreach { case (a, b) =>
+      if (a < b) {
+        ends(n) = a
+        ends(n + 1) = b
+        n += 2
+      }
+    }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    java.util.Arrays.sort(ids)
+    var k = 0
+    var i = 0
+    while (i < n) {
+      if (k == 0 || ids(i) != ids(k - 1)) { ids(k) = ids(i); k += 1 }
+      i += 1
+    }
+    val parent = Array.range(0, k)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < n) {
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, k, ends(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, k, ends(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    Iterator.range(0, k).map(j => (ids(j), ids(find(j))))
+  }
+
+  private def distributed(sym: DataFrame, maxRounds: Int): DataFrame = {
     // label(id) starts at min(id, min neighbor) — one round for free
     var assign = Checkpoints.fence(
       sym.groupBy(col("a").as("id"))
@@ -76,32 +150,14 @@ object ConnectedComponents {
         .join(assign.withColumnRenamed("id", "b"), "b")
         .groupBy(col("a").as("id"))
         .agg(min(col("comp")).as("comp"))
-      // OPTIONAL pointer-DOUBLING jumps 2..j (fence + self-join each):
-      // default 1 — on the committed sf0.1 graphs the deep component
-      // is a ~2^12-node chain, and doubling only cut rounds 12→10
-      // while TRIPLING wall (re-measured under this fused round:
-      // ~13 s vs ~3.3 s warm at 32c; r17 measured the same direction
-      // under the old 3-join round). Raise only when per-round shuffle
-      // volume, not round count × fixed job overhead, dominates.
-      var lab = next
-      var j = 1
-      while (j < jumpsPerRound) {
-        val m = Checkpoints.fence(lab)
-        lab = m
-          .join(m.select(col("id").as("__l_id"), col("comp").as("__l_comp")),
-            col("comp") === col("__l_id"), "left")
-          .select(col("id"),
-            coalesce(col("__l_comp"), col("comp")).as("comp"))
-        j += 1
-      }
       // convergence rides the round's materialization as an observed
       // metric — labels are pointwise non-increasing, so an unchanged
       // label SUM (exact DECIMAL, no overflow at any scale) means no
       // label changed; no __old column and no separate changed-rows
       // job. One extra fixpoint-confirming round, same as the old
       // changed==0 check.
-      val obs = org.apache.spark.sql.Observation()
-      val fenced = Checkpoints.fence(lab
+      val obs = Observation()
+      val fenced = Checkpoints.fence(next
         .observe(obs, sum(col("comp").cast("decimal(38,0)")).as("lsum")))
       val s = obs.get("lsum").asInstanceOf[java.math.BigDecimal]
       // null sum = empty label table (no edges): nothing can change
@@ -110,12 +166,15 @@ object ConnectedComponents {
       assign = fenced
       round += 1
     }
-    // measurement affordance (stderr only): the round count is the CC
-    // family's cost driver — every optimization decision here starts
-    // from it, and it is invisible in plans (the loop runs behind
-    // checkpoint fences at construction time)
-    System.err.println(s"[cc] converged after $round rounds" +
-      (if (round >= maxRounds) " (HIT maxRounds cap)" else ""))
+    // labels that have not reached the fixpoint are wrong components,
+    // not approximate ones: fail rather than return them
+    if (!converged)
+      throw new IllegalStateException(
+        s"connected components did not converge in maxRounds = $maxRounds rounds")
+    // measurement affordance (stderr only): the round count is the
+    // distributed path's cost driver, and it is invisible in plans
+    // (the loop runs behind checkpoint fences at construction time)
+    System.err.println(s"[cc] converged after $round rounds")
     assign
   }
 

@@ -34,12 +34,17 @@ import org.apache.spark.sql.functions._
   *    unchanged.
   *  - doc-id restricted variants NEVER shuffle the fact table: small
   *    sets (≤ `IsinThreshold`) become an `isin` literal predicate that
-  *    Catalyst pushes into the parquet scan, where row-group min/max
-  *    stats on a doc_id-clustered layout (graft.sources.ClusteredParquet)
-  *    prune all non-matching row groups — the reference's point-lookup
-  *    perf contract (README "100 doc_ids in ~1s on 10M rows"). Larger
-  *    sets become a broadcast inner join (hash lookup per row, no fact
-  *    shuffle, scan still pruned by the id min/max range predicate).
+  *    Catalyst pushes into the parquet scan. On a doc_id-clustered
+  *    layout (graft.sources.ClusteredParquet) row-group min/max stats
+  *    prune per id only for sets of at most
+  *    `spark.sql.parquet.pushdown.inFilterThreshold` ids (10 by
+  *    default). A larger `In` reaches the parquet reader as an `in`
+  *    predicate whose statistics test compares only the set's
+  *    [min, max] with each row group's, so scattered ids prune little
+  *    (100 random ids over 500k clustered rows scan nearly all of
+  *    them). Sets above `IsinThreshold` become a broadcast inner join
+  *    (hash lookup per row, no fact shuffle, scan pruned by the id
+  *    min/max range predicate).
   */
 object InvertedIndex {
 
@@ -47,7 +52,8 @@ object InvertedIndex {
   def fieldNameToColumn(fieldName: String): String = fieldName.replace('.', '_')
 
   /** Ids below this become an `isin` literal filter (pushed to the
-    * parquet reader for row-group pruning); above it, a broadcast join.
+    * parquet reader, which prunes by id or by the ids' range — see
+    * the object note); above it, a broadcast join.
     * ~10k In-values is where predicate evaluation starts costing more
     * than a broadcast hash probe. */
   val IsinThreshold = 10000

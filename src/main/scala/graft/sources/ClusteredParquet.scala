@@ -22,8 +22,13 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   *  - parquet dictionary encoding + stats are on by default; zstd
   *    matches the reference's codec.
   *
-  * At 100 TB the same layout means a 100-id lookup touches ≤100 row
-  * groups out of millions — the scan cost is O(ids), not O(data).
+  * Row groups are pruned per id only for id sets of at most
+  * `spark.sql.parquet.pushdown.inFilterThreshold` (10 by default).
+  * A larger `In` reaches the parquet reader as an `in` predicate whose
+  * statistics test compares only the set's [min, max] with each row
+  * group's, so a lookup of scattered ids reads every row group inside
+  * that range: 100 random ids over a 500k-row layout scan nearly all
+  * 500k rows. Narrow or dense id sets still prune to O(ids).
   * Row-group size is tunable (`parquet.block.size`): smaller groups →
   * finer pruning for point loads, larger → better scans.
   */
@@ -47,7 +52,8 @@ object ClusteredParquet {
   /** R8: doc-id point lookup over a clustered layout. The In predicate
     * is pushed into the parquet scan (see
     * InvertedIndex.restrictToDocIds), where row-group stats skip
-    * every group whose [min,max] misses the ids. */
+    * every group whose [min,max] misses the ids — or, above the
+    * parquet in-filter threshold, misses the ids' [min, max] range. */
   def pointLookup(spark: SparkSession, path: String, docIds: Seq[Long],
                   docIdCol: String = "doc_id"): DataFrame =
     graft.operators.InvertedIndex.restrictToDocIds(read(spark, path), docIds, docIdCol)

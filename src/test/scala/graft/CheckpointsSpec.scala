@@ -50,7 +50,8 @@ class CheckpointsSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 10L), (5L, 5L), (3L, 1L))
       .toDF("id1", "id2")
-    def run() = ConnectedComponents.components(edges).collect()
+    // the distributed loop is the path that fences every round
+    def run() = PipelineOpsSpec.distributedCC(ConnectedComponents.components(edges).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
     val reliable = withReliable(run())

@@ -8,43 +8,57 @@ import graft.operators.{ConnectedComponents, Decontaminate, Sampling, TextStats}
   * deterministic sampling, n-gram repetition stats. */
 class PipelineOpsSpec extends AnyFunSuite {
   import SparkTestSession._
+  import PipelineOpsSpec._
 
   // ---- connected components -------------------------------------------
 
-  /** Brute-force union-find twin for the components oracle. */
-  private def ufComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    parent.keys.map(k => k -> find(k)).toMap
+  private def ccMap(edges: Seq[(Long, Long)], maxRounds: Int = 25): Map[Long, Long] = {
+    import spark.implicits._
+    ConnectedComponents.components(edges.toDF("id1", "id2"), maxRounds)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   test("components matches union-find on a mixed graph (chain, triangle, singles)") {
-    import spark.implicits._
-    // a 6-node path (worst case for plain propagation), a triangle,
-    // an isolated pair, ids deliberately out of order
-    val edges = Seq((10L, 9L), (9L, 8L), (8L, 7L), (7L, 6L), (6L, 5L),
-      (20L, 22L), (22L, 21L), (21L, 20L), (30L, 31L))
-    val got = ConnectedComponents.components(edges.toDF("id1", "id2"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == ufComponents(edges))
+    assert(ccMap(mixedGraph) == ufComponents(mixedGraph))
   }
 
   test("components converges on a long path in O(log n) rounds (pointer jumping)") {
-    import spark.implicits._
     // 64-node path: plain 1-hop propagation needs 63 rounds; pointer
     // jumping must finish well inside maxRounds=10
-    val edges = (0L until 63L).map(i => (i, i + 1))
-    val got = ConnectedComponents.components(edges.toDF("id1", "id2"), maxRounds = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = distributedCC(ccMap(path64, maxRounds = 10))
     assert(got.size == 64 && got.values.forall(_ == 0L),
       s"path must collapse to component 0: ${got.toSeq.sortBy(_._1).take(8)}...")
+  }
+
+  test("components: the single-task and distributed paths both equal union-find") {
+    import spark.implicits._
+    val graphs = Seq(
+      "mixed" -> mixedGraph,
+      "path64" -> path64,
+      "star" -> (1L to 40L).map(i => (0L, i)),
+      "self-loops only" -> Seq((5L, 5L), (7L, 7L)),
+      "empty" -> Seq.empty[(Long, Long)],
+      "negative and sparse ids" -> Seq((-5L, 1000000000000L), (1000000000000L, -9L),
+        (Long.MinValue + 1, 3L), (42L, -42L), (-42L, 7L)))
+    // the path is picked from the edge table's size: a MapPartitions
+    // node in the plan is the single-task union-find
+    def singleTask(edges: Seq[(Long, Long)]) =
+      ConnectedComponents.components(edges.toDF("id1", "id2")).queryExecution
+        .optimizedPlan.collectFirst {
+          case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m
+        }.isDefined
+    graphs.foreach { case (name, edges) =>
+      val want = ufComponents(edges)
+      assert(singleTask(edges), name)
+      assert(ccMap(edges) == want, s"single task, $name")
+      assert(!distributedCC(singleTask(edges)), name)
+      assert(distributedCC(ccMap(edges)) == want, s"distributed, $name")
+    }
+  }
+
+  test("components: the distributed path fails instead of returning unconverged labels") {
+    val e = intercept[IllegalStateException](distributedCC(ccMap(path64, maxRounds = 2)))
+    assert(e.getMessage.contains("maxRounds = 2"))
   }
 
   test("clusters + dropClustered keep exactly one doc per near-dup group") {
@@ -499,5 +513,41 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(fixed.nonEmpty)
     val recall = (exact & fixed).size.toDouble / exact.size
     assert(recall >= 0.4, f"recall vs brute force too low: $recall%.2f")
+  }
+}
+
+object PipelineOpsSpec {
+  import SparkTestSession.spark
+
+  /** Brute-force union-find twin for the components oracle. Self-loops
+    * add no node, as in `ConnectedComponents.components`. */
+  def ufComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.filter { case (a, b) => a != b }.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  /** A 6-node path (worst case for plain propagation), a triangle and
+    * an isolated pair, ids deliberately out of order. */
+  val mixedGraph: Seq[(Long, Long)] = Seq((10L, 9L), (9L, 8L), (8L, 7L), (7L, 6L), (6L, 5L),
+    (20L, 22L), (22L, 21L), (21L, 20L), (30L, 31L))
+
+  /** 64-node path: the distributed loop's deepest chain. */
+  val path64: Seq[(Long, Long)] = (0L until 63L).map(i => (i, i + 1))
+
+  /** Run `body` with broadcasts off, which forces
+    * `ConnectedComponents.components` onto its distributed loop. */
+  def distributedCC[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, prev)
   }
 }
